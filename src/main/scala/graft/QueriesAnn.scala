@@ -157,6 +157,7 @@ private[graft] object QueriesAnn extends OracleSqlHelpers {
       val out = Search.bm25TopKIndexed(loaded, Seq("spark", "join", "window"), k = 20)
         .localCheckpoint(true)
       loaded.release()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path)) // out is checkpointed
       out.transform(Ops.sortSmallT(col("rank")))
     }),
     // BM25 ingest fold ✚: hash-shard 0 plays the ingest batch; its

@@ -118,6 +118,7 @@ private[graft] object QueriesDedup extends OracleSqlHelpers {
           col("dist").cast(LongType).as("dist"))
         .localCheckpoint(true)
       ix.release()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path)) // out is checkpointed
       out.orderBy("name_p", "name_d")
     }),
     // winnowing ✚ (r9): MOSS positional fingerprints — any shared run of

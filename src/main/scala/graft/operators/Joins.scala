@@ -278,7 +278,9 @@ object Joins {
     * but ~`fpp` of genuinely-novel rows are falsely dropped too. Use it
     * where losing fpp of novel rows is an acceptable price for testing
     * novelty without a join (crawl frontier, seen-URL sets); follow with
-    * an exact anti-join instead when completeness is contractual. */
+    * an exact anti-join instead when completeness is contractual. `seen`
+    * is read-only: keys that pass are NOT added to it — fold them into the
+    * next bloom with [[bloomOfKeys]] between runs. */
   def bloomAntiFilter(df: DataFrame, keyCol: String, seen: Array[Byte]): DataFrame = {
     graft.expressions.GraftFunctions.register(df.sparkSession)
     df.filter(!call_function("graft_bloom_might_contain",
@@ -407,7 +409,9 @@ object Joins {
     * is the stored table. Output schema and semantics are identical to
     * `fuzzyJoin(probe, …, dict, …, ix.maxDist)` (the q136 gate asserts
     * index-probe ≡ from-scratch through the oracle): (id_l, id_r, str_l,
-    * str_r, dist) with id_l from the probe and id_r from the dictionary. */
+    * str_r, dist) with id_l from the probe and id_r from the dictionary.
+    * The index is read-only here: strings the dictionary should learn are
+    * folded in between runs with [[extendFuzzyIndex]], not per probe. */
   def fuzzyProbe(ix: FuzzyIndex, probe: DataFrame, probeId: String,
       probeStr: String): DataFrame = {
     val ps = probe.select(col(probeId).as("id_l"), col(probeStr).as("str_l"),

@@ -769,7 +769,9 @@ object Ops {
     * function of the data. One keyed window shuffle; no global sort, no
     * driver state. At cluster scale this is the compaction job shape: both
     * sides hash-partition on the key, skew bounded by per-key version
-    * count, never table size. */
+    * count, never table size. Re-folding a delta that restates old
+    * versions (replayed ingest) is idempotent: older `ordCol` values never
+    * clobber the standing winner. */
   def upsert(current: DataFrame, delta: DataFrame, keyCols: Seq[String],
       ordCol: String, tombstoneCol: Option[String] = None): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")

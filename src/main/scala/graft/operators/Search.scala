@@ -177,8 +177,9 @@ object Search {
 
   /** The (id, token, tf) postings rows of a document frame — the unit
     * every standing-index operation is built from ([[bm25Index]] pins
-    * them, [[extendBm25Index]] folds them in, and the streaming ingest
-    * twin ships each micro-batch's rows to the store's postings table;
+    * them, [[extendBm25Index]] folds them in, and a stream ships each
+    * micro-batch's rows to the store's postings table through
+    * [[graft.streaming.Streams.perBatch]];
     * doc lengths, term dfs and the corpus scalars all derive from these
     * rows by exact aggregation). */
   def bm25Postings(df: DataFrame, idCol: String, textCol: String): DataFrame =

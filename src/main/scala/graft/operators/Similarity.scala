@@ -965,7 +965,8 @@ object Similarity {
     * against the stored cents, then its m codes against the stored books
     * (over its residual when the index is residual-encoded). Output:
     * (id, cell, sub, code), m rows per vector — pure function of (batch,
-    * stored index), replayed in SQL by the q122 oracle. */
+    * stored index), replayed in SQL by the q122 oracle. The rows append to
+    * the store's cells/codes tables; the trained state stays read-only. */
   def assignToIvfPqIndex(
       batch: DataFrame, ix: IvfPqIndex, idCol: String, vecCol: String): DataFrame = {
     graft.expressions.GraftFunctions.register(batch.sparkSession)
@@ -1285,7 +1286,7 @@ object Similarity {
     * scale-invariant, so the sum IS the centroid for every cosine
     * purpose), `cnn` its exact self-dot. THIS is the standing state a
     * semantic-outlier ingest gate stores and reloads
-    * ([[graft.streaming.Streams.centroidGateStreamBulk]]); groups-cardinality,
+    * ([[graft.streaming.Streams.centroidGateBatch]]); groups-cardinality,
     * a plain parquet write away from persistent. */
   def groupCentroids(df: DataFrame, vecCol: String, grpCol: String,
       scale: Int = 1000): DataFrame = {

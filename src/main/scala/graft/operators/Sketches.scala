@@ -168,7 +168,10 @@ object Sketches {
 
   /** Merge count-min sketches built with the SAME (depth, width): plain
     * cell-wise sum — the mergeability that makes the sketch a standing,
-    * incrementally-foldable store (add a day by unioning its sketch). */
+    * incrementally-foldable store (add a day by unioning its sketch).
+    * Folding a replayed batch DOES double-count (a counting sketch has no
+    * key to dedup on) — feed the fold exactly-once input or an
+    * upstream-deduped topic. */
   def countMinMerge(sketches: Seq[DataFrame]): DataFrame = {
     require(sketches.nonEmpty, "need at least one sketch")
     sketches.reduce(_.unionByName(_)).groupBy(col("r"), col("b"))

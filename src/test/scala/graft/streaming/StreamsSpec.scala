@@ -411,10 +411,10 @@ class StreamsSpec extends SparkTestBase {
     // the same relational path through a REAL StreamingQuery via foreachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streams.dropEmbeddingNearDupsStreamBulk(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", ix,
-        threshold = 0.9) { out =>
-      got ++= out.select("vec_id").collect().map(_.getLong(0))
+    val q = Streams.perBatch(mem.toDF().toDF("vec_id", "embedding")) { b =>
+      got ++= Streams.dropEmbeddingNearDupsBatch(b, "vec_id", "embedding", ix,
+          threshold = 0.9)
+        .select("vec_id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -442,9 +442,9 @@ class StreamsSpec extends SparkTestBase {
     // the same no-retrain assignment through a REAL StreamingQuery
     val got = scala.collection.mutable.Set[(Long, Long, Int, Long)]()
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streams.assignEmbeddingsStreamBulk(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding", ix) { out =>
-      got ++= out.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+    val q = Streams.perBatch(mem.toDF().toDF("vec_id", "embedding")) { b =>
+      got ++= Similarity.assignToIvfPqIndex(b, ix, "vec_id", "embedding")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -462,9 +462,9 @@ class StreamsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val got = scala.collection.mutable.Set[(Long, String, Long)]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.bm25PostingsStreamBulk(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text") { out =>
-      got ++= out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    val q = Streams.perBatch(mem.toDF().toDF("doc_id", "text")) { b =>
+      got ++= Search.bm25Postings(b, "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     }.start()
     try {
       mem.addData(rows: _*)
@@ -485,9 +485,8 @@ class StreamsSpec extends SparkTestBase {
     assert(batchOut.intersect((40L to 50L).toSet).isEmpty)
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.bloomNoveltyStreamBulk(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", seen) { out =>
-      got ++= out.collect().map(_.getLong(0))
+    val q = Streams.perBatch(mem.toDF().toDF("doc_id", "text")) { b =>
+      got ++= Joins.bloomAntiFilter(b, "doc_id", seen).collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -514,9 +513,9 @@ class StreamsSpec extends SparkTestBase {
     assert(kept == Set(10L))
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String, Array[Double])]
-    val q = Streams.centroidGateStreamBulk(
-        mem.toDF().toDF("id", "grp", "vec"), "vec", "grp", cents, 500000000L) { out =>
-      got ++= out.collect().map(_.getAs[Long]("id"))
+    val q = Streams.perBatch(mem.toDF().toDF("id", "grp", "vec")) { b =>
+      got ++= Streams.centroidGateBatch(b, "vec", "grp", cents, 500000000L)
+        .collect().map(_.getAs[Long]("id"))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -545,9 +544,9 @@ class StreamsSpec extends SparkTestBase {
     assert(kept == Set(20L, 22L))
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String, Double)]
-    val q = Streams.conformalGateStreamBulk(
-        mem.toDF().toDF("id", "grp", "score"), "score", "grp", th) { out =>
-      got ++= out.collect().map(_.getAs[Long]("id"))
+    val q = Streams.perBatch(mem.toDF().toDF("id", "grp", "score")) { b =>
+      got ++= Streams.conformalGateBatch(b, "score", "grp", th)
+        .collect().map(_.getAs[Long]("id"))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -567,9 +566,9 @@ class StreamsSpec extends SparkTestBase {
     assert(batchOut == Set((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L)))
     val got = scala.collection.mutable.Set[(Long, Long)]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.fuzzyProbeStreamBulk(
-        mem.toDF().toDF("id", "s"), "id", "s", ix) { out =>
-      got ++= out.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val q = Streams.perBatch(mem.toDF().toDF("id", "s")) { b =>
+      got ++= Joins.fuzzyProbe(ix, b, "id", "s")
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
     }.start()
     try {
       mem.addData(batch: _*)
@@ -697,9 +696,9 @@ class StreamsSpec extends SparkTestBase {
     // the same gate through a REAL StreamingQuery via foreachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.surprisalGateStream(
-        mem.toDF().toDF("id", "text"), "id", "text", lm, thr) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.perBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.surprisalGateBatch(b, "id", "text", lm, thr)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData((10L, "the quick dog"), (11L, "zzz qqq xxx www yyy"))
@@ -735,9 +734,9 @@ class StreamsSpec extends SparkTestBase {
     // the same gate through a REAL StreamingQuery via foreachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.unigramBudgetStream(
-        mem.toDF().toDF("id", "text"), "id", "text", vocab, budget) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.perBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.unigramBudgetBatch(b, "id", "text", vocab, budget)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData((10L, "the cat"),
@@ -771,9 +770,9 @@ class StreamsSpec extends SparkTestBase {
     // the same gate through a REAL StreamingQuery via foreachBatch
     val got = scala.collection.mutable.Set[Long]()
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.wordpieceBudgetStream(
-        mem.toDF().toDF("id", "text"), "id", "text", vocab, 3L) { out =>
-      got ++= out.select("id").collect().map(_.getLong(0))
+    val q = Streams.perBatch(mem.toDF().toDF("id", "text")) { b =>
+      got ++= Streams.wordpieceBudgetBatch(b, "id", "text", vocab, 3L)
+        .select("id").collect().map(_.getLong(0))
     }.start()
     try {
       mem.addData((10L, "low"), (11L, "zzz zzz"),
@@ -827,10 +826,9 @@ class StreamsSpec extends SparkTestBase {
     }.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     var state = init
     val mem = MemoryStream[(Long, Long, String, Boolean)]
-    val q = Streams.upsertStreamBulk(mem.toDF().toDF("k", "ord", "v", "dead"),
-        Seq("k"), "ord", Some("dead"))(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("k", "ord", "v", "dead")) { b =>
+      state = Ops.upsert(state, b, Seq("k"), "ord", Some("dead")).localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -849,9 +847,10 @@ class StreamsSpec extends SparkTestBase {
     // standing state starts as an EMPTY cell table
     var state = Seq.empty[(Int, Long, Long)].toDF("r", "b", "c")
     val mem = MemoryStream[Tuple1[Long]]
-    val q = Streams.countMinStreamBulk(mem.toDF().toDF("item"), "item",
-        depth, width)(() => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("item")) { b =>
+      state = Sketches.countMinMerge(Seq(state,
+        Sketches.countMinBuild(b, "item", depth, width))).localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -882,10 +881,10 @@ class StreamsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     var got: Map[Long, String] = Map.empty
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.classifyGateStreamBulk(mem.toDF().toDF("id", "text"),
-        "id", "text", model, minMarginMicro = 100000L)(
-        out => got = out.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("id", "text")) { b =>
+      got = Streams.classifyGateBatch(b, "id", "text", model, minMarginMicro = 100000L)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    }.start()
     try {
       mem.addData(batch: _*); q.processAllAvailable()
       assert(got == expect && got.nonEmpty)
@@ -907,11 +906,11 @@ class StreamsSpec extends SparkTestBase {
       case (c, l) => (c.localCheckpoint(true), l.localCheckpoint(true))
     }
     val mem = MemoryStream[(Long, String, Long, Long)]
-    val q = Streams.transitionsStreamBulk(mem.toDF().toDF("u", "st", "t", "id"),
-        "u", "st", "t", "id")(
-        () => state,
-        (c, l) => state = (c.localCheckpoint(true), l.localCheckpoint(true)))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("u", "st", "t", "id")) { b =>
+      val (c, l) = Sequences.ingestTransitions(state._1, state._2, b,
+        "u", "st", "t", "id")
+      state = (c.localCheckpoint(true), l.localCheckpoint(true))
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -935,10 +934,10 @@ class StreamsSpec extends SparkTestBase {
     val b2 = Seq((1L, 12L), (3L, 25L), (2L, 5L), (1L, 15L))
     var state = Seq.empty[(Long, Long)].toDF("key", "period")
     val mem = MemoryStream[(Long, Long)]
-    val q = Streams.periodIngestStreamBulk(
-        mem.toDF().toDF("u", "t"), "u", "t", periodUs = 10L)(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("u", "t")) { b =>
+      state = Sequences.ingestPeriods(state, b, "u", "t", periodUs = 10L)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -965,10 +964,9 @@ class StreamsSpec extends SparkTestBase {
     var state = Seq.empty[(String, String, Long, Long)]
       .toDF("item_i", "item_j", "n_ij", "wins_i")
     val mem = MemoryStream[(String, String)]
-    val q = Streams.gamesIngestStreamBulk(
-        mem.toDF().toDF("w", "l"), "w", "l")(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("w", "l")) { b =>
+      state = Stats.ingestGames(state, b, "w", "l").localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -997,10 +995,10 @@ class StreamsSpec extends SparkTestBase {
     var state = Seq.empty[(Long, Long, Long, Long)]
       .toDF("bin", "n", "n_pos", "sp_micro")
     val mem = MemoryStream[(Double, Boolean)]
-    val q = Streams.calibrationIngestStreamBulk(
-        mem.toDF().toDF("p", "y"), "p", "y", nBins = 10)(
-        () => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("p", "y")) { b =>
+      state = Stats.ingestCalibration(state, b, "p", "y", nBins = 10)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -1057,10 +1055,10 @@ class StreamsSpec extends SparkTestBase {
     val b2 = Seq((1L, 30L, 4L, 4.0), (1L, 40L, 5L, 8.0), (1L, 50L, 6L, 16.0))
     var state = Seq.empty[(Long, Long, Long, Double)].toDF("u", "t", "id", "v")
     val mem = MemoryStream[(Long, Long, Long, Double)]
-    val q = Streams.recentIngestStreamBulk(
-        mem.toDF().toDF("u", "t", "id", "v"), "u", "t", "v", "id",
-        lookback = 4)(() => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("u", "t", "id", "v")) { b =>
+      state = Sequences.ingestRecent(state, b, "u", "t", "v", "id", lookback = 4)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
@@ -1089,10 +1087,10 @@ class StreamsSpec extends SparkTestBase {
     val b2 = Seq((1L, 30L, 4L, "c"), (1L, 40L, 5L, "d"), (3L, 50L, 6L, "q"))
     var state = Seq.empty[(Long, String, Long, Long)].toDF("u", "s", "t", "id")
     val mem = MemoryStream[(Long, Long, Long, String)]
-    val q = Streams.prefixIngestStreamBulk(
-        mem.toDF().toDF("u", "t", "id", "s"), "u", "s", "t", "id",
-        maxLen = 3)(() => state, out => state = out.localCheckpoint(true))
-      .start()
+    val q = Streams.perBatch(mem.toDF().toDF("u", "t", "id", "s")) { b =>
+      state = Sequences.ingestPrefix(state, b, "u", "s", "t", "id", maxLen = 3)
+        .localCheckpoint(true)
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
